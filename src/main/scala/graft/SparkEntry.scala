@@ -1576,10 +1576,10 @@ object SparkEntry {
       // which hides the salted exchange salting exists to demonstrate —
       // in the real salting regime the build side is too big to broadcast
       // by definition.
-      val li = Analytics.read(s, dir, "lineitem")
+      val li = t(s, dir, "lineitem")
         .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
-      val sup = Analytics.read(s, dir, "supplier")
-        .join(broadcast(Analytics.read(s, dir, "nation")),
+      val sup = t(s, dir, "supplier")
+        .join(broadcast(t(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name"))
         .hint("shuffle_hash")
@@ -1599,9 +1599,9 @@ object SparkEntry {
       // sides shuffle ONCE on the key, sort within partitions, and stream
       // the merge without materializing either side. Plan shape pinned in
       // PlanRegressionSpec; results oracle-checked like any other query.
-      val li = Analytics.read(s, dir, "lineitem")
+      val li = t(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"))
-      val ord = Analytics.read(s, dir, "orders").hint("merge")
+      val ord = t(s, dir, "orders").hint("merge")
         .select(col("o_orderkey"), col("o_orderpriority"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables.read
 
 /** Relational analytics surface over the TPC-H-ish tables. The reference
   * has NO joins/aggregations/sorts/sets (SURVEY §2.2) — this module exposes
@@ -20,9 +21,6 @@ import org.apache.spark.sql.functions._
   *     at runtime from actual sizes.
   */
 object Analytics {
-
-  def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
 
   /** TPC-H Q1-style pricing summary: full-scan groupBy with partial aggs.
     * Sums rounded to 2dp so double-summation order differences vs the
