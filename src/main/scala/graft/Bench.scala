@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.Harness.{Run, force, loadAvg, processCpuNanos, timedRun}
 
 /** Driver-run benchmark: times every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line. Each query is forced with the noop sink, which
@@ -52,42 +53,6 @@ object Bench {
     "src_format_census", "vocab_unigram_encode", "docs_unigram_bits",
     "mm_audio_neardups", "mm_audio_cross_corpus", "docs_tokenizer_compare")
 
-  /** 1-minute load average from /proc/loadavg, or -1 where unreadable.
-    * Environment telemetry (round-12 verdict task 2): the round-12 driver
-    * capture inflated the CPU-bound text family 4-15× vs the committed
-    * same-binary sweep and the payload carried nothing to adjudicate it —
-    * "box pressure" was an inference. Now every per-query stat carries the
-    * box load and this JVM's CPU/wall ratio at measurement time, so a >2×
-    * swing is attributable to load (high loadavg, depressed cpu ratio on
-    * an unchanged plan) or to code (normal load, ratio unchanged) from the
-    * payload alone.
-    */
-  private def loadAvg(): Double =
-    try java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/loadavg"))
-      .get(0).split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  /** Cumulative CPU nanos burned by THIS JVM (all threads), or -1. */
-  private def processCpuNanos(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
-
-  /** One timed execution: wall seconds, process-CPU-seconds / wall-seconds
-    * (0..nCpus; drops under external contention), 1-min loadavg at finish.
-    */
-  private final case class Run(sec: Double, cpu: Double, load: Double)
-
-  private def timedRun(body: => Unit): Run = {
-    val c0 = processCpuNanos(); val t0 = System.nanoTime()
-    body
-    val wall = (System.nanoTime() - t0) / 1e9
-    val cpu =
-      if (c0 >= 0 && wall > 0) (processCpuNanos() - c0) / 1e9 / wall else -1.0
-    Run(wall, cpu, loadAvg())
-  }
-
   /** Reference figures from a prior committed bench payload, used as the
     * same-binary baseline for the outlier-rerun policy — per-query medians
     * (`query_stats.<name>.med`) PLUS the non-query line families the
@@ -121,31 +86,14 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     // reference figures for the outlier policy — read FIRST: BENCH_OUT may
     // point at the same file this run overwrites at the end
     val refs = refFigures(sys.env.getOrElse("BENCH_REF", "bench_out.json"))
     val sweepLoad0 = loadAvg()
     val sweepCpu0 = processCpuNanos(); val sweepT0 = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shared-box contention headroom (see the Verify builder comment)
-      .config("spark.sql.broadcastTimeout", "1800")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-
-    // warmup: touch each table once + exercise codegen/shuffle machinery
-    try {
-      Seq("lineitem", "orders", "customer", "documents", "embeddings", "events")
-        .foreach(n => force(Tables.read(spark, sfDir, n).limit(1000)))
-      force(spark.range(1000000).selectExpr("sum(id) as s"))
-    } catch { case _: Throwable => () }
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
 
     import org.apache.spark.sql.functions._
 
@@ -208,7 +156,7 @@ object Bench {
       val perBatch = 2000000L
       val stream = spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", perBatch.toString)
-        .option("numPartitions", cpus)
+        .option("numPartitions", cpus.toString)
         .load()
         .select(col("value").cast("string").as("key"),
           when(pmod(col("value"), lit(100)) === 0,
@@ -293,17 +241,8 @@ object Bench {
     // single-shot (or spread-less) figure appears anywhere in the
     // payload now.
     def runOnce(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
-      val r = timedRun {
-        try force(fn(spark, sfDir))
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      }
-      // free any checkpoint blocks the builder registered — each run
-      // builds (and registers) its own, so without this the storage
-      // footprint grows with every timed invocation
-      Cleanup.drain()
-      r
-    }
+                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run =
+      Harness.step("bench", name)(fn(spark, sfDir))(force)
     def time(entries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
              runs: Int = 3): Seq[(String, Seq[Run])] =
       entries.sortBy(_._1).map { case (name, fn) =>

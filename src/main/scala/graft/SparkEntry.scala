@@ -1585,8 +1585,7 @@ object SparkEntry {
         .hint("shuffle_hash")
       Analytics.saltedJoin(li, sup, "l_suppkey", "s_suppkey", salts = 8)
         .groupBy(col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-          count(lit(1)).as("n_items"))
+        .agg(Analytics.exactRevenue.as("revenue"), count(lit(1)).as("n_items"))
         .orderBy(col("n_name"))
     }),
     "q_window_rank" -> ((s, dir) =>
@@ -2673,6 +2672,13 @@ object SparkEntry {
     */
   def oracleSql: Map[String, String] = {
     val routeCase = Router.routeSql("text", DocRoutePlan.resolved)
+    // decimal revenue, as Analytics.exactRevenue sums it
+    val q05Sql =
+      """SELECT n_name, CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+        |  * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2) AS DOUBLE) AS revenue, count(*) AS n_items
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |GROUP BY n_name ORDER BY n_name""".stripMargin
     // shared text-analysis fragments (DuckDB dialect)
     val toks = raw"string_split_regex(trim(text), '\s+')"
     val subw = raw"regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')"
@@ -4221,16 +4227,8 @@ object SparkEntry {
           |JOIN customer ON o_custkey = c_custkey
           |WHERE c_mktsegment = 'BUILDING'
           |GROUP BY l_orderkey ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-      "q05_revenue_by_nation" ->
-        """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue, count(*) AS n_items
-          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          |JOIN nation ON s_nationkey = n_nationkey
-          |GROUP BY n_name ORDER BY n_name""".stripMargin,
-      "q05_salted" -> // salting must not change the result: same oracle as q05
-        """SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue, count(*) AS n_items
-          |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-          |JOIN nation ON s_nationkey = n_nationkey
-          |GROUP BY n_name ORDER BY n_name""".stripMargin,
+      "q05_revenue_by_nation" -> q05Sql,
+      "q05_salted" -> q05Sql, // salting must not change the result: same oracle as q05
       "q13_custdist" ->
         """SELECT CAST(c_count AS BIGINT) AS c_count, CAST(count(*) AS BIGINT) AS custdist FROM
           |(SELECT c_custkey, count(o_orderkey) AS c_count

@@ -64,10 +64,17 @@ object Analytics {
       .join(broadcast(supplier), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-        count(lit(1)).as("n_items"))
-
+      .agg(exactRevenue.as("revenue"), count(lit(1)).as("n_items"))
   }
+
+  /** Σ l_extendedprice·(1 − l_discount) summed as decimal cents and rounded
+    * HALF_UP to 2 dp, then a double. A double sum of a total that ends in an
+    * exact half cent rounds either way with the summation order; the
+    * decimal one is exact, and DuckDB rounds it the same way.
+    */
+  private[graft] def exactRevenue: Column =
+    round(sum(col("l_extendedprice").cast("decimal(15,2)") *
+      (lit(1) - col("l_discount").cast("decimal(15,2)"))), 2).cast("double")
 
   /** Window-function surface: rank orders by totalprice within priority. */
   def topOrdersPerPriority(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {

@@ -68,6 +68,25 @@ class AnalyticsSpec extends AnyFunSuite {
     r.foreach { case (q, c) => assert(q > 0); assert(c > 0) }
   }
 
+  test("q05 revenue that ends in an exact half cent rounds up, in every row order") {
+    // Σ price·(1 − discount) = 407094.2050 exactly; summed as doubles in
+    // this order it is 407094.20499999996, reversed 407094.205
+    val lines = Seq((21770.52, 0.03), (98810.64, 0.0), (97821.80, 0.09),
+      (67551.94, 0.0), (38091.37, 0.0), (94392.87, 0.02))
+    for (order <- Seq(lines, lines.reverse)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-q05").toFile.getAbsolutePath
+      order.map { case (p, d) => (1L, p, d) }.toDF("l_suppkey", "l_extendedprice", "l_discount")
+        .coalesce(1).write.parquet(s"$dir/lineitem.parquet")
+      Seq((1L, 0)).toDF("s_suppkey", "s_nationkey").write.parquet(s"$dir/supplier.parquet")
+      Seq((0, "NATION_0")).toDF("n_nationkey", "n_name").write.parquet(s"$dir/nation.parquet")
+      for (q <- Seq("q05_revenue_by_nation", "q05_salted")) {
+        val got = graft.SparkEntry.queries(q)(spark, dir)
+          .select($"n_name", $"revenue", $"n_items").as[(String, Double, Long)].collect().toSeq
+        assert(got == Seq(("NATION_0", 407094.21, 6L)), s"$q, rows ${order.map(_._1).mkString(" ")}")
+      }
+    }
+  }
+
   test("rollup emits leaf, subtotal and grand-total rows") {
     val rows = Analytics.ordersRollup(spark, sf0001)
       .select("status", "priority").as[(String, String)].collect()
